@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every registry query at SPARK_GRAFT_SF_DIR and
   * prints ONE compact JSON line. Queries run in deterministic sorted
@@ -40,6 +39,9 @@ object Bench {
 
   private def r3(v: Double): String =
     "%.3f".formatLocal(java.util.Locale.ROOT, v)
+
+  /** Timed runs per query: SPARK_GRAFT_BENCH_REPS, default 3. */
+  def benchReps: Int = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
 
   /** Upper median (index n/2 of the sorted runs) — for the usual 3 reps
     * this is the true median; robust against one slow JIT/GC outlier,
@@ -381,15 +383,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // GraftSession defaults matter here: without AQE the iterative index
     // builds run every tiny shuffle at full static width (32 tasks of a
     // few hundred rows each), and the build phase is 2-3x slower at
     // local[32] than AQE-coalesced — measured, not theoretical.
-    val spark = GraftSession.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     val jiffies0 = cpuJiffies()
     // Host calibration BEFORE any Spark work contends for cores: the
@@ -397,7 +395,7 @@ object Bench {
     // then the fixed I/O sweep (first-touch + warm) over the SF dir —
     // ordered CPU-first so the spin never measures a page-cache fill.
     val calib1t = calibSpin(1)
-    val calib32t = calibSpin(cpus.toInt)
+    val calib32t = calibSpin(GraftSession.cores)
     val (calibIoMbps, calibIoWarm) = ioSpin(sfDir)
     // Per-query I/O counters (r14 verdict's #1 ask): the process-wide
     // /proc/self/io deltas — rchar (logical read() bytes: parquet,
@@ -486,17 +484,15 @@ object Bench {
     // never filtered out from UNDER a selected query: a filtered query
     // that needs an unselected build simply pays it inside its first
     // rep, so builds stay selected whenever any query is.
-    val builds =
-      (graft.dedup.Dedup.buildSteps(t) ++ graft.ann.Ann.buildSteps(t) ++
-        graft.text.TextOps.buildSteps(t))
-        .filter { case (name, _) => selected(s"_build_$name") }
-        .map { case (name, run) => timed(s"_build_$name")(run()) }
+    val builds = SparkEntry.buildSteps(t)
+      .filter { case (name, _) => selected(s"_build_$name") }
+      .map { case (name, run) => timed(s"_build_$name")(run()) }
     // Settling pause: let the build phase's GC debt and JIT compilation
     // drain before any query is timed — round 4 showed the first queries
     // after the builds absorbing 10x phantom costs on untouched code.
     System.gc()
     Thread.sleep(3000)
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
+    val reps = benchReps
     // Deterministic sorted order + median of `reps` runs per query: a
     // per-query number must be attributable to the query's plan, not to
     // where it landed relative to a GC pause or a contended neighbor.

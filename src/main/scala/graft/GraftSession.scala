@@ -2,16 +2,23 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Recommended session factory for the graft engine.
+/** Session factory for the graft engine.
   *
-  * Local mode mirrors the driver harness (local[32], 32 shuffle
-  * partitions); on a real cluster callers set master/partitions to match
-  * executor topology — everything else here is topology-independent:
+  * `local` is the one place in the engine that builds a session: Bench,
+  * Verify, SfGen and the dev tool all run on it, so they plan and time
+  * the same engine. Local mode mirrors the driver harness (local[32],
+  * 32 shuffle partitions); on a real cluster callers apply `configure`
+  * to their own builder and set master/partitions to match executor
+  * topology — everything `configure` sets is topology-independent:
   * AQE (runtime coalescing + skew-join splitting), UTC, nanos-parquet
   * tolerance, and the graft native function surface.
   */
 object GraftSession {
-  def local(cores: Int = 32): SparkSession = configure(
+  /** Local core count: SPARK_GRAFT_CPUS, default 32 (the driver harness). */
+  def cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+
+  /** A local session with `cores` threads and as many shuffle partitions. */
+  def local(): SparkSession = configure(
     SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores)).getOrCreate()

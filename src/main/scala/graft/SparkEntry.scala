@@ -75,6 +75,22 @@ object SparkEntry {
     }.toMap
   }
 
+  /** The bench's index build steps, each memoized structure once under
+    * its own name, in dependency order: Dedup, then Ann, then TextOps.
+    * Bench times them as `_build_<name>` and the dev tool runs them by
+    * that name, so two steps sharing a name are rejected.
+    */
+  def buildSteps(t: Tables): Seq[(String, () => Unit)] =
+    uniqueSteps(graft.dedup.Dedup.buildSteps(t) ++ graft.ann.Ann.buildSteps(t) ++
+      graft.text.TextOps.buildSteps(t))
+
+  private[graft] def uniqueSteps(
+    steps: Seq[(String, () => Unit)]): Seq[(String, () => Unit)] = {
+    val dups = steps.groupBy(_._1).collect { case (n, s) if s.size > 1 => n }
+    require(dups.isEmpty, s"duplicate build step names: ${dups.toSeq.sorted.mkString(", ")}")
+    steps
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.
     */

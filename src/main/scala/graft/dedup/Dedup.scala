@@ -190,7 +190,6 @@ object Dedup {
     * re-derives df separately). Warmed by buildSteps.
     */
   private[graft] def jaccardIndex(t: Tables, maxDf: Int = 50): DataFrame = {
-    graft.functions.GraftFunctions.register(t.spark)
     // maxDf is part of the memo key — a non-default cap must never
     // silently return the cached default-cap index
     graft.PersistCache.getOrElseUpdate(t.spark, t.dir + s"#jaccard-index-$maxDf")(
@@ -280,7 +279,6 @@ object Dedup {
     * buildSteps.
     */
   private[graft] def minhashBanded(t: Tables): DataFrame = {
-    graft.functions.GraftFunctions.register(t.spark)
     val k = 16; val bands = 4; val rows = k / bands
     val sig = withTwins(t)
       .select(col("doc_id"), call_function("graft_minhash", col("text")).as("sig"))
@@ -414,7 +412,6 @@ object Dedup {
       """
     }
   ) { t =>
-    graft.functions.GraftFunctions.register(t.spark)
     val det = minhashCands(t)
       .select(col("id1"), col("id2"),
         (size(filter(zip_with(col("sig1"), col("sig2"), (x, y) => x === y),
@@ -481,7 +478,6 @@ object Dedup {
       """
     }
   ) { t =>
-    graft.functions.GraftFunctions.register(t.spark)
     val cp = minhashCands(t).select(col("id1"), col("id2"))
     val inv = withTwins(t)
       .select(col("doc_id"),
@@ -533,7 +529,6 @@ object Dedup {
     */
   def simhashPairs(t: Tables): DataFrame = {
     graft.PersistCache.getOrElseUpdate(t.spark, t.dir + "#simhash-pairs")({
-      graft.functions.GraftFunctions.register(t.spark)
       // corpus-size-derived band split (one cheap count inside the
       // memoized build) — mirrors the oracle's sbp CTE
       val nb = simhashBands(withTwins(t).count())
@@ -565,7 +560,6 @@ object Dedup {
     * once per dataset, not once per operator.
     */
   def simhashLabels(t: Tables): DataFrame = {
-    graft.functions.GraftFunctions.register(t.spark)
     graft.PersistCache.getOrElseUpdate(t.spark, t.dir + "#simhash-labels")(
       connectedComponents(simhashPairs(t).select(col("id1"), col("id2"))))
   }
@@ -958,7 +952,6 @@ object Dedup {
     * buildSteps.
     */
   private[graft] def idfBanded(t: Tables): DataFrame = {
-    graft.functions.GraftFunctions.register(t.spark)
     graft.PersistCache.getOrElseUpdate(t.spark, t.dir + "#idf-banded") {
       val n = withTwins(t).count()
       val tokc = withTwins(t)
@@ -1309,7 +1302,6 @@ object Dedup {
       ORDER BY d.source
     """)
   ) { t =>
-    graft.functions.GraftFunctions.register(t.spark)
     val wins = withTwins(t)
       .select(col("doc_id"),
         explode(call_function("graft_winhash", col("text"))).as("wh"))
@@ -1374,7 +1366,6 @@ object Dedup {
       ORDER BY doc_id
     """)
   ) { t =>
-    graft.functions.GraftFunctions.register(t.spark)
     import org.apache.spark.sql.expressions.Window
     val wins = withTwins(t)
       .select(col("doc_id"),
@@ -2087,7 +2078,6 @@ object Dedup {
     }
   ) { t =>
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(t.spark)
     val m = 4294967296L
     // one codegen'd kernel pass (graft_shingle_charfold) replaces the
     // shingle-string build (transform/slice/array_join) AND the
@@ -2307,7 +2297,6 @@ object Dedup {
       """
     }
   ) { t =>
-    graft.functions.GraftFunctions.register(t.spark)
     val banded = minhashBanded(t)
     val probes = banded.filter(col("doc_id").isin(1L, 2L, 3L))
       .select(col("doc_id").as("query_id"), col("band"), col("bucket"))
@@ -2437,7 +2426,6 @@ object Dedup {
     }
   ) { t =>
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(t.spark)
     val toks = withTwins(t)
       .select(col("doc_id"),
         posexplode(call_function("graft_wordhashes", col("text"))))
@@ -2518,7 +2506,6 @@ object Dedup {
       """
     }
   ) { t =>
-    graft.functions.GraftFunctions.register(t.spark)
     val sig = withTwins(t)
       .select(col("doc_id"), call_function("graft_minhash", col("text")).as("sig"))
     val orig = sig.filter(col("doc_id") < 1000000L)

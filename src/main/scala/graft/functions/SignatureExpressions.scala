@@ -743,21 +743,11 @@ case class BitLanesExpr(child: Expression) extends UnaryExpression {
 /** Registration — both styles:
   *   - GraftExtensions for spark.sql.extensions=graft.functions.GraftExtensions
   *   - GraftFunctions.register(spark) for imperative installs on a live
-  *     session (idempotent; used by the Q builders).
+  *     session (idempotent; run by every `Tables` constructor).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftFunctions.simhashDesc)
-    ext.injectFunction(GraftFunctions.minhashDesc)
-    ext.injectFunction(GraftFunctions.shinglesDesc)
-    ext.injectFunction(GraftFunctions.fingerprintDesc)
-    ext.injectFunction(GraftFunctions.wordHashesDesc)
-    ext.injectFunction(GraftFunctions.bigramsDesc)
-    ext.injectFunction(GraftFunctions.bitLanesDesc)
-    ext.injectFunction(GraftFunctions.winHashDesc)
-    ext.injectFunction(GraftFunctions.cosDesc)
-    ext.injectFunction(GraftFunctions.dist2Desc)
-    ext.injectFunction(GraftFunctions.dotDesc)
+    GraftFunctions.all.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => graft.plans.ApproxQuantileRewrite)
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
     ext.injectParser((session, delegate) =>
@@ -813,83 +803,32 @@ case class CrossMomentsExpr(child: Expression) extends UnaryExpression
 }
 
 object GraftFunctions {
-  val simhashDesc: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_simhash64"),
-      new ExpressionInfo(classOf[SimHash64Expr].getName, "graft_simhash64"),
-      (args: Seq[Expression]) => SimHash64Expr(args.head))
+  type Descriptor = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
-  val minhashDesc: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinHashSigExpr].getName, "graft_minhash"),
-      (args: Seq[Expression]) => MinHashSigExpr(args.head))
+  private def fn(name: String, cls: Class[_])(build: Seq[Expression] => Expression): Descriptor =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
 
-  val shinglesDesc: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[ShingleHashesExpr].getName, "graft_shingles"),
-      (args: Seq[Expression]) => ShingleHashesExpr(args.head))
-
-  val bigramsDesc: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_bigrams"),
-      new ExpressionInfo(classOf[BigramsExpr].getName, "graft_bigrams"),
-      (args: Seq[Expression]) => BigramsExpr(args.head))
-
-  val fingerprintDesc: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_fingerprint"),
-      new ExpressionInfo(classOf[FingerprintExpr].getName, "graft_fingerprint"),
-      (args: Seq[Expression]) => FingerprintExpr(args.head))
-
-  val wordHashesDesc: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_wordhashes"),
-      new ExpressionInfo(classOf[WordHashesExpr].getName, "graft_wordhashes"),
-      (args: Seq[Expression]) => WordHashesExpr(args.head))
-
-  val bitLanesDesc: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_bitlanes"),
-      new ExpressionInfo(classOf[BitLanesExpr].getName, "graft_bitlanes"),
-      (args: Seq[Expression]) => BitLanesExpr(args.head))
-
-  val winHashDesc: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_winhash"),
-      new ExpressionInfo(classOf[WindowHashesExpr].getName, "graft_winhash"),
-      (args: Seq[Expression]) => WindowHashesExpr(args.head))
-
-  val shingleCharFoldDesc: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_shingle_charfold"),
-      new ExpressionInfo(classOf[ShingleCharFoldsExpr].getName, "graft_shingle_charfold"),
-      (args: Seq[Expression]) => ShingleCharFoldsExpr(args.head))
-
-  val cosDesc: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_cos"),
-      new ExpressionInfo(classOf[CosineExpr].getName, "graft_cos"),
-      (args: Seq[Expression]) => CosineExpr(args(0), args(1)))
-
-  val dist2Desc: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_dist2"),
-      new ExpressionInfo(classOf[Dist2Expr].getName, "graft_dist2"),
-      (args: Seq[Expression]) => Dist2Expr(args(0), args(1)))
-
-  val dotDesc: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotExpr].getName, "graft_dot"),
-      (args: Seq[Expression]) => DotExpr(args(0), args(1)))
-
-  val crossMomDesc: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_crossmom"),
-      new ExpressionInfo(classOf[CrossMomentsExpr].getName, "graft_crossmom"),
-      (args: Seq[Expression]) => CrossMomentsExpr(args.head))
-
-  val unigramSegDesc: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_unigram_seg"),
-      new ExpressionInfo(classOf[UnigramSegExpr].getName, "graft_unigram_seg"),
-      (args: Seq[Expression]) =>
-        UnigramSegExpr(args(0), args(1), args(2), args(3)))
+  /** Every graft_* function. GraftExtensions injects exactly this list
+    * and `register` installs it, so the two surfaces cannot diverge. */
+  val all: Seq[Descriptor] = Seq(
+    fn("graft_simhash64", classOf[SimHash64Expr])(a => SimHash64Expr(a.head)),
+    fn("graft_minhash", classOf[MinHashSigExpr])(a => MinHashSigExpr(a.head)),
+    fn("graft_shingles", classOf[ShingleHashesExpr])(a => ShingleHashesExpr(a.head)),
+    fn("graft_bigrams", classOf[BigramsExpr])(a => BigramsExpr(a.head)),
+    fn("graft_fingerprint", classOf[FingerprintExpr])(a => FingerprintExpr(a.head)),
+    fn("graft_wordhashes", classOf[WordHashesExpr])(a => WordHashesExpr(a.head)),
+    fn("graft_bitlanes", classOf[BitLanesExpr])(a => BitLanesExpr(a.head)),
+    fn("graft_winhash", classOf[WindowHashesExpr])(a => WindowHashesExpr(a.head)),
+    fn("graft_shingle_charfold", classOf[ShingleCharFoldsExpr])(a => ShingleCharFoldsExpr(a.head)),
+    fn("graft_cos", classOf[CosineExpr])(a => CosineExpr(a(0), a(1))),
+    fn("graft_dist2", classOf[Dist2Expr])(a => Dist2Expr(a(0), a(1))),
+    fn("graft_dot", classOf[DotExpr])(a => DotExpr(a(0), a(1))),
+    fn("graft_crossmom", classOf[CrossMomentsExpr])(a => CrossMomentsExpr(a.head)),
+    fn("graft_unigram_seg", classOf[UnigramSegExpr])(a => UnigramSegExpr(a(0), a(1), a(2), a(3))))
 
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    Seq(simhashDesc, minhashDesc, shinglesDesc, bigramsDesc,
-      fingerprintDesc, wordHashesDesc, bitLanesDesc, winHashDesc,
-      shingleCharFoldDesc, cosDesc,
-      dist2Desc, dotDesc, crossMomDesc, unigramSegDesc).foreach { case (id, info, builder) =>
+    all.foreach { case (id, info, builder) =>
       if (!reg.functionExists(id)) reg.registerFunction(id, info, builder)
     }
   }

@@ -189,7 +189,6 @@ object CorpusPipeline {
     val selected = cfg.dsirMinWeightBp match {
       case None => clean
       case Some(minBp) =>
-        graft.functions.GraftFunctions.register(t.spark)
         val keep = CurationOps
           .dsirDocWeights(clean.select(col("doc_id"), col("text")))
           .filter(col("w_bp") >= minBp)

@@ -123,7 +123,6 @@ object CurationOps {
       ORDER BY s.source_a, s.source_b
     """)
   ) { t =>
-    graft.functions.GraftFunctions.register(t.spark)
     val srcSh = t.documents
       .select(col("source"),
         explode(call_function("graft_shingles", col("text"))).as("sh"))
@@ -177,7 +176,6 @@ object CurationOps {
       ORDER BY source
     """)
   ) { t =>
-    graft.functions.GraftFunctions.register(t.spark)
     val wins = t.documents
       .select(col("source"), col("doc_id"),
         explode(call_function("graft_shingles", col("text"))).as("sh"))
@@ -298,7 +296,6 @@ object CurationOps {
       """
     }
   ) { t =>
-    graft.functions.GraftFunctions.register(t.spark)
     val scored = t.documents.select(col("source"),
       aggregate(
         transform(
@@ -366,7 +363,6 @@ object CurationOps {
       """
     }
   ) { t =>
-    graft.functions.GraftFunctions.register(t.spark)
     val dw = dsirDocWeights(t.documents.select(col("doc_id"), col("text")))
     t.documents.select(col("doc_id"), col("source")).join(dw, "doc_id")
       .groupBy(col("source"))

@@ -197,7 +197,6 @@ object TextOps {
       """
     }
   ) { t =>
-    graft.functions.GraftFunctions.register(t.spark)
     t.documents
       .select(col("doc_id"),
         call_function("graft_fingerprint", col("text")).as("fingerprint"),
@@ -262,7 +261,6 @@ object TextOps {
       LIMIT 20
     """)
   ) { t =>
-    graft.functions.GraftFunctions.register(t.spark)
     val ws = words(col("text"))
     t.documents
       .filter(size(ws) >= 2)
@@ -1210,7 +1208,6 @@ object TextOps {
       """
     }
   ) { t =>
-    graft.functions.GraftFunctions.register(t.spark)
     val entries = t.documents
       .select(col("doc_id"),
         explode(call_function("graft_wordhashes", lower(trim(col("text"))))).as("h"))
@@ -1286,7 +1283,6 @@ object TextOps {
       """
     }
   ) { t =>
-    graft.functions.GraftFunctions.register(t.spark)
     val hs = t.documents
       .select(call_function("graft_wordhashes", lower(trim(col("text")))).as("hs"))
     val pairs = hs.select(explode(expr(
@@ -1603,7 +1599,6 @@ object TextOps {
     */
   private[graft] def unigramArtifacts(t: Tables): DataFrame =
     graft.PersistCache.getOrElseUpdate(t.spark, t.dir + "#unigram") {
-      graft.functions.GraftFunctions.register(t.spark)
       import graft.plans.Pin.pinned
       val words = pinned(t.documents
         .select(explode(split(trim(col("text")), "\\s+")).as("w0"))

@@ -321,6 +321,14 @@ class ClickHouseDialectSpec extends SparkSpec {
         .config("spark.sql.shuffle.partitions", "4")
         .withExtensions(new graft.functions.GraftExtensions())
         .getOrCreate()
+      // the extension alone resolves every graft_* function, before any
+      // Tables constructor registers them on the session
+      Seq("graft_simhash64", "graft_minhash", "graft_shingles", "graft_bigrams",
+        "graft_fingerprint", "graft_wordhashes", "graft_bitlanes", "graft_winhash",
+        "graft_shingle_charfold", "graft_cos", "graft_dist2", "graft_dot",
+        "graft_crossmom", "graft_unigram_seg").foreach { n =>
+        assert(s2.sql(s"DESCRIBE FUNCTION $n").collect().mkString.contains(n), n)
+      }
       Tables(s2, "/root/testdata/sf0.001").events
         .createOrReplaceTempView("events_e2e")
       ClickHouseSql.registerEngine("events_e2e",

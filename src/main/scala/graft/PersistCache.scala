@@ -73,7 +73,9 @@ object PersistCache {
       })
 
   /** Memoized build: returns the cached frame for (session, key) or runs
-    * `build` (which should persist its result) and caches it.
+    * `build`, holds its result with `Materialize.share` (a build that
+    * already persisted or checkpointed its result keeps it as it is)
+    * and caches it.
     */
   def getOrElseUpdate(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
     val id = idOf(spark)
@@ -90,7 +92,7 @@ object PersistCache {
         // run an expensive (and persisting) build
         slot.synchronized {
           slot.frames.getOrElse(key, {
-            val df = build
+            val df = graft.plans.Materialize.share(build)
             slot.frames.put(key, df)
             df
           })

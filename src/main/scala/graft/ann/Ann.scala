@@ -1,6 +1,7 @@
 package graft.ann
 
 import graft.{Q, Tables}
+import graft.plans.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
@@ -267,10 +268,8 @@ object Ann {
     // both hit (the earlier per-slot builds ran the training sub-plan
     // twice — once per tuple element).
     lazy val built = ivfIndexBuild(t, c, nprobe)
-    (graft.PersistCache.getOrElseUpdate(t.spark, s"${t.dir}#ivf-cells-$c")(
-      built._1.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)),
-      graft.PersistCache.getOrElseUpdate(t.spark, s"${t.dir}#ivf-probes-$c-$nprobe")(
-        built._2.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+    (graft.PersistCache.getOrElseUpdate(t.spark, s"${t.dir}#ivf-cells-$c")(built._1),
+      graft.PersistCache.getOrElseUpdate(t.spark, s"${t.dir}#ivf-probes-$c-$nprobe")(built._2))
   }
 
   private def ivfEmb(t: Tables): DataFrame =
@@ -346,7 +345,6 @@ object Ann {
         .groupBy(col("cid"))
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("cv_i")))),
           e => e.getField("cv_i")).as("cv"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
   }
 
@@ -627,7 +625,6 @@ object Ann {
         .select(col("vec_id"),
           transform(col("embedding"),
             x => floor(x.cast(DoubleType) / col("scale") * 127 + 0.5)).as("qvec"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   // ann_range_search — range query variant: ALL corpus vectors within
@@ -768,8 +765,7 @@ $pivots
           lit(m).as("m"), pqCode(col("embedding"), m).as("code"),
           pqGrid(col("embedding"), m).as("gv"))): _*)).as("e"))
         .select(col("vec_id"), col("e.m").as("m"), col("e.code").as("code"),
-          col("e.gv").as("gv"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          col("e.gv").as("gv")))
 
   /** Per-query ADC lookup table (query_id, m, code, part) — memoized:
     * the codebook aggregation over the corpus code table is the
@@ -777,8 +773,7 @@ $pivots
     * the query panel. Warmed by buildSteps (`_build_adc`).
     */
   private def pqLut(t: Tables): DataFrame =
-    graft.PersistCache.getOrElseUpdate(t.spark, t.dir + "#pq-lut")(
-      pqLutBuild(t).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    graft.PersistCache.getOrElseUpdate(t.spark, t.dir + "#pq-lut")(pqLutBuild(t))
 
   /** PQ codebook as exact integer SUM vectors + member counts (the
     * centroid is sv/cnt, never divided) — shared by the ADC lut and
@@ -915,7 +910,6 @@ $pivots
           lit(m).as("m"), rcode(m).as("code"), rsub(m).as("rgvm"))): _*)).as("e"))
         .select(col("vec_id"), col("cell"), col("e.m").as("m"),
           col("e.code").as("code"), col("e.rgvm").as("rgvm"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   // ann_ivfpq_residual — IVF + residual-coded PQ (the full FAISS IVFPQ
@@ -1388,17 +1382,15 @@ $pivots
     val cents = ivfCentroids(t, cellsFor(2L * t.embeddings.count()))
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
     // three consumers (both sides of the in-cell pair join + the verdict
-    // join) — pin the vector-grain assignment so the quantize pass runs
-    // ONCE; Pin.pinned (persist MEMORY_AND_DISK, lazy as of r16: blocks
-    // fill during the first consuming action) rather than relying on
-    // plan reuse, so a cache-evicted memoized quantizer cannot silently
-    // triple the cost (the r10/r11 driver-bench hypothesis), and
-    // lineage survives executor loss at cluster scale.
+    // join) — share the vector-grain assignment so the quantize pass
+    // runs ONCE rather than relying on plan reuse, so a cache-evicted
+    // memoized quantizer cannot silently triple the cost (the r10/r11
+    // bench hypothesis).
     // Assignment rides the assignCells kernel (r16): the broadcast-join
     // form moved 2n·cells wide rows through the exchange, an n² data
     // volume under the corpus-derived cell dial; embeddings join back
     // id-keyed (linear) for the in-cell cosine verify.
-    val assigned = graft.plans.Pin.pinned(
+    val assigned = Materialize.share(
       assignCells(twins, cents).select(col("vec_id"), col("cell"))
         .join(twins.select(col("vec_id"), col("embedding")), "vec_id"))
     val dup = assigned.as("a")
@@ -1591,7 +1583,6 @@ $pivots
       val cents = ivfCentroids(t, knnCells(t)).collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
       assignCells(ivfEmb(t), cents)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   /** Memoized cell-bounded k-NN edge set (vec_id, neighbor_id, dot_q;
@@ -1609,7 +1600,6 @@ $pivots
           call_function("graft_dot", col("a.qv"), col("b.qv"))
             .cast(LongType).as("dot_q"))
       graft.plans.TopKPerGroup.topK(pairs, Seq("vec_id"), "dot_q", "neighbor_id", 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   val knnGraph = Q(
@@ -1737,15 +1727,14 @@ $pivots
     // cur_i feeds BOTH the trace union and cur_{i+1} twice (as candidate
     // and as join seed) — without truncation the hop chain re-derives
     // every earlier hop exponentially (measured ~10 s of micro-job
-    // scheduling at sf0.1). localCheckpoint (lazy since r16: truncation
-    // is at creation, blocks fill on first consume) pins each 1-row-
-    // per-query frame so every hop runs exactly once.
+    // scheduling at sf0.1); truncating each 1-row-per-query frame runs
+    // every hop exactly once.
     var cur = score(
       qcell.join(assigned.select(col("vec_id"), col("cell")), "cell")
         .groupBy(col("query_id"))
         .agg(min(col("vec_id")).as("cand"), first(col("gq")).as("gq")))
       .select(col("query_id"), col("gq"), col("cand").as("node"), col("dot_q"))
-      .localCheckpoint(false)
+      .transform(Materialize.truncate)
     val steps = scala.collection.mutable.ArrayBuffer(
       cur.select(col("query_id"), lit(0L).as("step"), col("node"), col("dot_q")))
     for (i <- 1 to 3) {
@@ -1760,7 +1749,7 @@ $pivots
           first(col("gq")).as("gq"))
         .select(col("query_id"), col("gq"), col("p.cand").as("node"),
           col("p.dot_q").as("dot_q"))
-        .localCheckpoint(false)
+        .transform(Materialize.truncate)
       steps += cur.select(col("query_id"), lit(i.toLong).as("step"),
         col("node"), col("dot_q"))
     }

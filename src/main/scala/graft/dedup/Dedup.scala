@@ -2,6 +2,7 @@ package graft.dedup
 
 import graft.{Q, Tables}
 import graft.functions.PortableHash
+import graft.plans.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
@@ -200,8 +201,7 @@ object Dedup {
         .groupBy(col("shingle"))
         .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
         .filter(size(col("ids")) <= maxDf)
-        .select(col("ids"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .select(col("ids")))
   }
 
   // dedup_ngram_jaccard — 3-word-shingle Jaccard via inverted-index
@@ -287,8 +287,7 @@ object Dedup {
         posexplode(transform(sequence(lit(0), lit(bands - 1)),
           b => aggregate(slice(col("sig"), b * rows + 1, lit(rows)),
             (b + 1).cast(LongType), (acc, v) => (acc * 31 + v) % P))))
-        .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket"))
   }
 
   /** The MinHash signature → banding → candidate-pair CTE chain (corpus →
@@ -540,7 +539,7 @@ object Dedup {
           b => call_function("shiftright", col("sig"), b * w)
             .bitwiseAND(lit((1L << w) - 1)))))
         .withColumnRenamed("pos", "band").withColumnRenamed("col", "bval")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(Materialize.share)
       banded.as("a")
         .join(banded.as("b"),
           col("a.band") === col("b.band") && col("a.bval") === col("b.bval") &&
@@ -549,7 +548,6 @@ object Dedup {
           bit_count(col("a.sig").bitwiseXOR(col("b.sig"))).cast(LongType).as("hamming"))
         .filter(col("hamming") <= 8)
         .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     })
   }
 
@@ -572,16 +570,7 @@ object Dedup {
     * union-find.
     */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // undirected edge list, both directions
-    val ccDebug = sys.env.contains("GRAFT_CC_DEBUG")
-    def dbg[A](what: String)(f: => A): A =
-      if (!ccDebug) f else {
-        val t0 = System.nanoTime()
-        val r = f
-        System.err.println(f"[cc] $what ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        r
-      }
     // No distinct and no intermediate persist: every producer hands this
     // loop a deduped (id1 < id2) pair list (simhashPairs ends in
     // .distinct()), so doubling directions cannot create duplicate
@@ -595,12 +584,12 @@ object Dedup {
     // default: each round is a join+agg over the edge list, and tiny
     // graphs on many partitions pay per-round scheduling that dwarfs the
     // work (~500k edges per partition is comfortable).
-    val edgeCount = dbg("edge materialize")(2L * pairs.count())
+    val edgeCount = 2L * pairs.count()
     val spark = pairs.sparkSession
     val nParts = math.max(1, math.min(spark.sparkContext.defaultParallelism,
       (edgeCount / 500000L).toInt + 1))
     val edges = edges0.repartition(nParts, col("dst"))
-      .persist(MEMORY_AND_DISK)
+      .transform(Materialize.share)
     // Iterative micro-queries: AQE re-materializes and re-plans every
     // shuffle stage (a blocking round-trip per stage), and the session's
     // shuffle partitioning fans tiny data across idle tasks — both
@@ -619,14 +608,11 @@ object Dedup {
 
   private def connectedComponentsLoop(edges: DataFrame, maxIters: Int): DataFrame = {
     val nodes = edges.select(col("src").as("id")).distinct()
-    // localCheckpoint each round: persists AND truncates the logical plan —
-    // without it the iterative lineage doubles per round (labels appears
-    // twice in each step) and planning itself OOMs after ~10 rounds.
-    // LAZY (r16): truncation happens at creation either way (the plan
-    // becomes a LogicalRDD immediately); the blocks fill during the
-    // round's convergence-sum action instead of a dedicated eager job —
-    // one blocking job round-trip saved per round.
-    var labels = nodes.withColumn("label", col("id")).localCheckpoint(false)
+    // truncate each round: without it the iterative lineage doubles per
+    // round (labels appears twice in each step) and planning itself OOMs
+    // after ~10 rounds. The blocks fill during the round's convergence-sum
+    // action.
+    var labels = nodes.withColumn("label", col("id")).transform(Materialize.truncate)
     // Convergence metric: Σ label is strictly decreasing until fixed point
     // (labels only ever drop to a smaller reachable id) — one cheap agg
     // per round instead of a change-count join.
@@ -634,7 +620,7 @@ object Dedup {
     var sum = labels.agg(org.apache.spark.sql.functions.sum(col("label"))).head().getLong(0)
     var i = 0
     // Two neighbor-min steps are fused per materialization: the dominant
-    // per-round cost is the blocking action + eager checkpoint, not the
+    // per-round cost is the blocking action + checkpoint fill, not the
     // join itself, so halving the number of materializations ~halves wall
     // time (dup-pair graphs converge in a handful of flooding steps).
     // Two is also the MEASURED optimum (r15, sf0.1 pair graph): blocks
@@ -667,14 +653,10 @@ object Dedup {
       ls.join(l2.hint("shuffle_hash"), col("label") === col("jid"), "left")
         .select(col("id"), coalesce(col("jlabel"), col("label")).as("label"))
     }
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
     while (sum < prevSum && i < maxIters) {
-      val t0 = if (debug) System.nanoTime() else 0L
-      val next = jump(step(jump(step(labels)))).localCheckpoint(false)
+      val next = jump(step(jump(step(labels)))).transform(Materialize.truncate)
       prevSum = sum
       sum = next.agg(org.apache.spark.sql.functions.sum(col("label"))).head().getLong(0)
-      if (debug) System.err.println(
-        f"[cc] round $i sum=$sum wall=${(System.nanoTime() - t0) / 1e9}%.2f s")
       labels = next
       i += 2
     }
@@ -790,7 +772,6 @@ object Dedup {
         base.select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")))
         .select(col("vec_id"), col("embedding"),
           graft.functions.VectorLsh.bucket(col("embedding"), np).as("bucket"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     })
   }
 
@@ -989,7 +970,6 @@ object Dedup {
           bb => call_function("shiftright", col("sig"), bb * w)
             .bitwiseAND(lit((1L << w) - 1)))))
         .withColumnRenamed("pos", "band").withColumnRenamed("col", "bval")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
   }
 
@@ -1494,7 +1474,7 @@ object Dedup {
   // with a per-source yield report at the end of each stage, so the cut
   // composition is auditable. The expensive structure (the pair graph)
   // is shared, not rebuilt, and each stage's survivor set is
-  // localCheckpoint-materialized once — the multi-flag report joins read
+  // truncated (materialized) once — the multi-flag report joins read
   // the materialized sets instead of re-running the gate regexes and the
   // dedup aggregation once per flag branch.
   val trainCorpus = Q(
@@ -1566,21 +1546,21 @@ object Dedup {
     val ws = split(trim(col("text")), "\\s+")
     val nStop = size(filter(ws, w =>
       w.isin(graft.text.TextOps.stopwords: _*)))
-    // one gate scan, materialized (eager localCheckpoint): every later
-    // stage and flag branch reads this, never the regex gate again
+    // one gate scan, truncated: every later stage and flag branch reads
+    // this, never the regex gate again
     val gated = t.documents
       .filter(size(ws) >= 20 &&
         nStop.cast(DoubleType) / size(ws) >= 0.05)
       .select(col("doc_id"), col("source"),
         md5(lower(col("text")).cast("binary")).as("k"))
-      .localCheckpoint(false)
+      .transform(Materialize.truncate)
     val exactKept = gated
       .groupBy(col("k"))
       .agg(min(col("doc_id")).as("doc_id"))
       .select(col("doc_id"))
     val exactSurv = gated.join(exactKept, "doc_id")
       .select(col("doc_id"), col("source"))
-      .localCheckpoint(false)
+      .transform(Materialize.truncate)
     val labels = simhashLabels(t).withColumnRenamed("id", "doc_id")
       .withColumnRenamed("label", "cc_label")
     // keeper per duplicate cluster = min doc id AMONG SURVIVORS of the
@@ -1593,7 +1573,7 @@ object Dedup {
       .withColumn("keeper", min(col("doc_id")).over(wg))
       .filter(col("doc_id") === col("keeper"))
       .select(col("doc_id"), col("source"))
-      .localCheckpoint(false)
+      .transform(Materialize.truncate)
     val w = Window.partitionBy(col("source"))
     val wo = w.orderBy(((col("doc_id") * 2654435761L) % 2147483648L), col("doc_id"))
     val sampled = nearSurv
@@ -1742,11 +1722,11 @@ object Dedup {
     val e = pairs.select(col("id1").as("src"), col("id2").as("dst"))
       .unionAll(pairs.select(col("id2").as("src"), col("id1").as("dst")))
     // node-sized degree relation, referenced by r0 AND every iteration's
-    // rank rebuild (4 subtrees): pinned so the executed plan reads one
+    // rank rebuild (4 subtrees): shared so the executed plan reads one
     // cached frame instead of re-aggregating the edge list per
     // reference (r16 — the executed AQE plan showed the deg exchange
     // replicated per iteration, ~3 stages each)
-    val deg = graft.plans.Pin.pinned(
+    val deg = Materialize.share(
       e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg")))
     val nDf = deg.agg(count(lit(1)).as("n"))
     var r = deg.crossJoin(broadcast(nDf))
@@ -1834,7 +1814,7 @@ object Dedup {
     // cores while its 8-core twin read 2.26 s. One count() over a
     // node-sized aggregate buys the race away. (dedup_hub_rank's deg
     // pin stays lazy: the driver measured it IMPROVING 2.11× there.)
-    val deg = graft.plans.Pin.pinned(
+    val deg = Materialize.share(
       e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg")))
     deg.count()
     val pd = p
@@ -1916,11 +1896,11 @@ object Dedup {
     }
   ) { t =>
     // The same iterative-loop discipline connectedComponents earned the
-    // hard way: localCheckpoint each round (lazy since r16 — persists AND truncates
-    // lineage — without it round r's logical plan embeds round r−1
-    // THREE times and planning alone goes exponential), AQE off and
-    // shuffle partitions pinned to the graph size for the loop only,
-    // loop joins hinted SHUFFLE_HASH so no per-round broadcast job.
+    // hard way: truncate each round (without it round r's logical plan
+    // embeds round r−1 THREE times and planning alone goes exponential),
+    // AQE off and shuffle partitions pinned to the graph size for the
+    // loop only, loop joins hinted SHUFFLE_HASH so no per-round
+    // broadcast job.
     val spark = t.spark
     import spark.implicits._
     val pairs = simhashPairs(t).select(col("id1"), col("id2"))
@@ -1934,20 +1914,17 @@ object Dedup {
       var e = pairs.select(col("id1").as("src"), col("id2").as("dst"))
         .unionAll(pairs.select(col("id2").as("src"), col("id1").as("dst")))
         .repartition(nParts, col("src"))
-        .localCheckpoint(false)
+        .transform(Materialize.truncate)
       val trajectory = (1 to 8).map { r =>
-        // lazy (r16): the blocks fill during the round's own count
-        // actions — the truncation is identical, two eager jobs per
-        // peeling round are gone
         val kept = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
           .filter(col("deg") >= 3).select(col("id"))
-          .localCheckpoint(false)
+          .transform(Materialize.truncate)
         e = e
           .join(kept.withColumnRenamed("id", "src").hint("shuffle_hash"),
             Seq("src"), "left_semi")
           .join(kept.withColumnRenamed("id", "dst").hint("shuffle_hash"),
             Seq("dst"), "left_semi")
-          .localCheckpoint(false)
+          .transform(Materialize.truncate)
         (r.toLong, kept.count(), e.count() / 2L)
       }
       trajectory.toDF("peel_round", "n_nodes", "n_edges")

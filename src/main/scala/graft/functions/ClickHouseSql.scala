@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.parser.ParserInterface
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.{DataType, StructType}
+import graft.plans.Materialize
 
 /** ClickHouse SQL-*text* surface beyond function names: `SELECT … FROM t
   * FINAL` and `PREWHERE` rewritten to plans Spark already optimizes, so
@@ -352,7 +353,7 @@ object ClickHouseSql {
     val base = spark.table(table)
     val block =
       (if (p.isAgg) projPartialAgg(base, p) else projSorted(base, p))
-        .localCheckpoint(true)
+        .transform(Materialize.snapshot)
     spark.sql(s"DROP TABLE IF EXISTS $store")
     clearStaleLocation(spark, store)
     block.write.saveAsTable(store)
@@ -2418,7 +2419,7 @@ object ClickHouseSql {
     */
   private def landBlockFor(spark: SparkSession, table: String,
     partVal: Option[String], df: DataFrame): Unit = {
-    val eager = df.localCheckpoint(true)
+    val eager = df.transform(Materialize.snapshot)
     partVal match {
       case Some(v) =>
         if (eager.isEmpty) {
@@ -2490,7 +2491,7 @@ object ClickHouseSql {
     def stripSemi(s: String): String = s.trim.stripSuffix(";").trim
     def run(table: String, body: String): DataFrame = {
       val df = spark.sql(rewrite(body, t => spark.table(t).columns.toSeq))
-      writeBlock(spark, table, df.localCheckpoint(true), "overwrite")
+      writeBlock(spark, table, df.transform(Materialize.snapshot), "overwrite")
       // CH recalculates projections when a mutation rewrites parts
       rematerializeProjections(spark, table)
       spark.table(table).limit(0)
@@ -2883,7 +2884,7 @@ object ClickHouseSql {
           require(missingPart.isEmpty,
             s"cannot drop/rename partition column(s) " +
               s"${missingPart.mkString(", ")} of $table")
-          val block = df.localCheckpoint(true)
+          val block = df.transform(Materialize.snapshot)
           val withGen = pt.genExpr match {
             case Some(g) => block.withColumn(GenPartCol,
               org.apache.spark.sql.functions.expr(g))
@@ -2898,7 +2899,7 @@ object ClickHouseSql {
             s"${newDeclared.map(q1).mkString(", ")} FROM ${pt.physical}")
           partTables.put(norm(table), pt.copy(declared = newDeclared))
         case None =>
-          df.localCheckpoint(true).write.mode("overwrite")
+          df.transform(Materialize.snapshot).write.mode("overwrite")
             .format("parquet").saveAsTable(table)
       }
       noop
@@ -3830,7 +3831,7 @@ object ClickHouseSql {
         // JSONEachRow fill above
         else defaultFill(table, f).as(f.name)
       }.toSeq: _*)
-    playInsert(spark, table, full.localCheckpoint(true), depth = 0)
+    playInsert(spark, table, full.transform(Materialize.snapshot), depth = 0)
     Some(spark.table(table).limit(0))
   }
 
@@ -3904,7 +3905,7 @@ object ClickHouseSql {
           }
         }.toSeq: _*)
       }
-    playInsert(spark, table, aligned.localCheckpoint(true), depth = 0)
+    playInsert(spark, table, aligned.transform(Materialize.snapshot), depth = 0)
     Some(spark.table(table).limit(0))
   }
 
@@ -3933,7 +3934,7 @@ object ClickHouseSql {
         val bound = rebindRelation(mv.select, mv.source, tmp)
         val out = spark
           .sql(rewrite(bound, t => spark.table(t).columns.toSeq))
-          .localCheckpoint(true)
+          .transform(Materialize.snapshot)
         playInsert(spark, mv.view, out, depth + 1)
       }
     }

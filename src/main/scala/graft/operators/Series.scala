@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.plans.Materialize
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
@@ -337,21 +338,19 @@ object Series {
               .cast(LongType)))
         .select(col("event_type"), col("d"), col("v"), col("b").cast(LongType).as("b"))
         // the greedy chain references this frame ~3× per unrolled step;
-        // without persist every broadcast subtree would re-aggregate the
+        // the memo shares it, so no broadcast subtree re-aggregates the
         // fact table. coalesce(1): the series is ≤366 rows/type — one
         // task per micro-stage instead of 32 near-empty ones.
         .coalesce(1)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
     // Each sel_i is referenced by BOTH the output union and sel_{i+1}'s
     // subtree — without truncation the final plan re-derives sel_1 once
     // per later step (quadratic micro-job blowup; measured ~6 s of pure
-    // scheduling at sf0.1). localCheckpoint(eager) pins each 1-row-per-
-    // type frame so every step is computed exactly once (lazy since
-    // r16: truncation at creation, blocks fill on first consume).
+    // scheduling at sf0.1); truncating each 1-row-per-type frame
+    // computes every step exactly once.
     var sel = bucketed.filter(col("b") === 0).select(col("event_type"),
       col("d").as("ad"), col("v").as("av"))
-      .localCheckpoint(false)
+      .transform(Materialize.truncate)
     val picks = scala.collection.mutable.ArrayBuffer(
       sel.select(col("event_type"), lit(0L).as("pick"),
         col("ad").as("day_num"), col("av").as("y_cents")))
@@ -369,7 +368,7 @@ object Series {
         .agg(max_by(struct(col("d"), col("v")),
           struct(col("score"), -col("d"))).as("p"))
         .select(col("event_type"), col("p.d").as("ad"), col("p.v").as("av"))
-        .localCheckpoint(false)
+        .transform(Materialize.truncate)
       picks += sel.select(col("event_type"), lit(i.toLong).as("pick"),
         col("ad").as("day_num"), col("av").as("y_cents"))
     }

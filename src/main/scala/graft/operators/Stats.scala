@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.plans.Materialize
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
@@ -1836,12 +1837,10 @@ object Stats {
       .agg(sum(col("l_extendedprice").cast(DecimalType(18, 2))
         .multiply(lit(100)).cast(LongType)).as("c"))
     // the supplier-grain relation feeds BOTH the nation totals and the
-    // share pass — pin it so the fact-table aggregation (the one heavy
+    // share pass — share it so the fact-table aggregation (the one heavy
     // shuffle) runs once, not once per consumer (it is supplier-
-    // dimension-sized, so the pinned blocks are bytes, not data);
-    // Pin.pinned keeps lineage so an executor loss recomputes instead of
-    // killing the job (the localCheckpoint trade — see Pin's doc)
-    val named = graft.plans.Pin.pinned(sup
+    // dimension-sized, so the shared blocks are bytes, not data)
+    val named = Materialize.share(sup
       .join(broadcast(t.supplier.select(col("s_suppkey"), col("s_nationkey"))),
         col("l_suppkey") === col("s_suppkey"))
       .join(broadcast(t.nation.select(col("n_nationkey"), col("n_name"))),
@@ -2096,7 +2095,7 @@ object Stats {
   ) { t =>
     import graft.plans.GroupedPrefix
     val ref = t.orders.agg(max(to_date(col("o_orderdate"))).as("r0"))
-    val cust = graft.plans.Pin.pinned(t.orders.crossJoin(broadcast(ref))
+    val cust = Materialize.share(t.orders.crossJoin(broadcast(ref))
       .groupBy(col("o_custkey"))
       .agg(
         // recency = days from the LAST order to the reference date
@@ -2105,10 +2104,10 @@ object Stats {
         count(lit(1)).as("f"),
         sum(col("o_totalprice").cast(DecimalType(18, 2))
           .multiply(lit(100)).cast(LongType)).as("m")))
-      // four consumers (three rank passes + the scoring pass) — pin the
-      // customer-grain relation so the fact aggregation runs ONCE (the
-      // plan otherwise re-scans orders per consumer; no ReusedExchange);
-      // lineage kept so executor loss recomputes (Pin's doc)
+      // four consumers (three rank passes + the scoring pass) — share
+      // the customer-grain relation so the fact aggregation runs ONCE
+      // (the plan otherwise re-scans orders per consumer; no
+      // ReusedExchange)
     // ONE GroupedPrefix rank pass for all three metrics (r14, the r13
     // verdict's q151 watch item): the customer relation melts to long
     // form (metric, v) and the staged sort range-partitions on

@@ -18,10 +18,10 @@ import org.apache.spark.sql.functions._
   * local position. The only single-partition step is the cumsum over
   * ≤ numPartitions count rows.
   *
-  * The sorted relation is localCheckpoint-ed: the counts branch and the
-  * rank branch MUST observe the same partition layout, and two
+  * The sorted relation is a Materialize.snapshot: the counts branch and
+  * the rank branch MUST observe the same partition layout, and two
   * materializations of a range exchange sample different partitioner
-  * bounds (exchange reuse is not guaranteed) — the checkpoint pins one
+  * bounds (exchange reuse is not guaranteed) — the snapshot pins one
   * layout for both consumers, and at real scale it doubles as the
   * sorted staging a shard writer reads anyway.
   */
@@ -39,11 +39,7 @@ object GlobalRank {
       .sortWithinPartitions(sortCols: _*)
       .withColumn("__mid", monotonically_increasing_id())
       .withColumn("__pid", shiftrightunsigned(col("__mid"), 33))
-      // eager again as of r17, for the same reason as GroupedPrefix
-      // .stage: the r16 lazy fill anti-scaled on the driver host at 32
-      // cores (PERF_r16.json) while the local eager-vs-lazy A/B is a
-      // wash — the dedicated materialization job is the proven shape.
-      .localCheckpoint(eager = true)
+      .transform(Materialize.snapshot)
     // per-partition sizes (order-independent, so this branch needs no
     // cross-branch row-order agreement) → cumulative offsets over
     // ≤ numPartitions rows → broadcast back onto the sorted slices

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   *   1. `stage`: range-partition on (g ++ sortKey) so each task holds a
   *      CONTIGUOUS SLICE of each group's global order, sort within
   *      partitions, tag the slice id, and pin the layout with a
-  *      localCheckpoint (two consumers must observe the same sampled
+  *      Materialize.snapshot (two consumers must observe the same sampled
   *      range bounds — exchange reuse is not guaranteed).
   *   2. per-slice partials: one partial-aggregable groupBy over
   *      (g, slice) — the slices relation has ≤ |g| + numPartitions rows
@@ -53,19 +53,9 @@ object GroupedPrefix {
     df.repartitionByRange(n, keys: _*)
       .sortWithinPartitions(keys: _*)
       // spark_partition_id is nondeterministic-tagged, so the project is
-      // never pushed below the sort; the checkpoint freezes the values.
-      // EAGER again as of r17: r16 made this lazy (fill during the first
-      // consuming action) and the local bench read it as a win, but the
-      // r16 driver artifact showed the lazy fill going pathological at
-      // 32 cores on that host (q141_quantile_exact 1.85 s -> 22.9 s,
-      // consistent across reps, while its 8-core twin stayed at 1.3 s —
-      // PERF_r16.json), and a controlled local re-measurement of the
-      // 12-query quantile/rank family read eager-vs-lazy as a wash
-      // (24.1 vs 23.4 s, the gap within the host-calibration delta).
-      // A dedicated materialization job whose blocks every consumer
-      // reads is the only shape with driver-host-proven behavior.
+      // never pushed below the sort; the snapshot freezes the values.
       .withColumn(PID, spark_partition_id())
-      .localCheckpoint(eager = true)
+      .transform(Materialize.snapshot)
   }
 
   /** Exclusive-prefix window over the slices relation: strictly-earlier

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.Tables
+import graft.plans.Materialize
 
 /** The training-corpus analog of [[graft.sources.SbomPipeline]]: the
   * registry's curation stages (quality gate → exact dedup → near-dup cut
@@ -141,14 +142,14 @@ object CorpusPipeline {
       .filter(col("n_tok") >= cfg.minTokens &&
         col("n_stop") * 10000L >= col("n_tok") * cfg.minStopwordBp)
       .drop("n_stop")
-      .localCheckpoint(false)
+      .transform(Materialize.truncate)
     stages += yieldOf("quality_gate", gated)
 
     val exactKept = gated
       .groupBy(md5(lower(col("text")).cast("binary")).as("k"))
       .agg(min(col("doc_id")).as("doc_id"))
       .select(col("doc_id"))
-    val exact = gated.join(exactKept, "doc_id").localCheckpoint(false)
+    val exact = gated.join(exactKept, "doc_id").transform(Materialize.truncate)
     stages += yieldOf("exact_dedup", exact)
 
     // keeper per near-dup component = min doc id among SURVIVORS (the
@@ -160,7 +161,7 @@ object CorpusPipeline {
       .withColumn("keeper", min(col("doc_id")).over(Window.partitionBy(col("grp"))))
       .filter(col("doc_id") === col("keeper"))
       .select(exact.columns.map(col): _*)
-      .localCheckpoint(false)
+      .transform(Materialize.truncate)
     stages += yieldOf("neardup_cut", near)
 
     val clean = cfg.holdout match {
@@ -179,7 +180,7 @@ object CorpusPipeline {
               i => concat_ws(" ", slice(col("w"), i, lit(5))))).as("sh"))
           .join(broadcast(benchSh), "sh")
           .select(col("doc_id")).distinct()
-        near.join(hit, Seq("doc_id"), "left_anti").localCheckpoint(false)
+        near.join(hit, Seq("doc_id"), "left_anti").transform(Materialize.truncate)
     }
     stages += yieldOf("decontaminate", clean)
 
@@ -193,12 +194,12 @@ object CorpusPipeline {
           .dsirDocWeights(clean.select(col("doc_id"), col("text")))
           .filter(col("w_bp") >= minBp)
           .select(col("doc_id"))
-        clean.join(keep, "doc_id").localCheckpoint(false)
+        clean.join(keep, "doc_id").transform(Materialize.truncate)
     }
     stages += yieldOf("dsir_select", selected)
 
     val mixed = if (cfg.sourceShareBp.isEmpty) selected
-                else mixSample(selected, cfg.sourceShareBp).localCheckpoint(false)
+                else mixSample(selected, cfg.sourceShareBp).transform(Materialize.truncate)
     stages += yieldOf("mix_sample", mixed)
 
     val sharded = shardLayout(mixed, cfg.shardTokenBudget)

@@ -1,6 +1,7 @@
 package graft.text
 
 import graft.{Q, Tables}
+import graft.plans.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
@@ -1375,10 +1376,10 @@ object TextOps {
         lead(col("tok"), 1).over(wOrd).as("r"))
       .filter(col("r").isNotNull)
       .groupBy(col("l"), col("r")).agg(sum(col("cnt")).as("pc"))
-    // pin the 1-row argmax: it feeds BOTH the merge application and the
-    // merge-table readout — unpinned, each consumer re-ran the pair
+    // share the 1-row argmax: it feeds BOTH the merge application and the
+    // merge-table readout — unshared, each consumer re-ran the pair
     // count over the whole upstream chain
-    val best = graft.plans.Pin.pinned(
+    val best = Materialize.share(
       pairs.orderBy(col("pc").desc, col("l"), col("r")).limit(1))
     val hits = prev.crossJoin(broadcast(best))
       .withColumn("hit",
@@ -1436,20 +1437,19 @@ object TextOps {
         .select(lower(col("w0")).as("word"))
         .filter(col("word") =!= "")
         .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
-      // pin each round's state: every round consumes its input TWICE
-      // (pair counts + merge application), so an unpinned chain
+      // share each round's state: every round consumes its input TWICE
+      // (pair counts + merge application), so an unshared chain
       // recomputed the whole prefix per consumer — ~2^rounds evaluations
       // of s0 and the dominant cost of `_build_bpe` (15.9 s local in
-      // r11; the states are vocabulary-sized, so the pins are small)
-      import graft.plans.Pin.pinned
-      val s0 = pinned(vocab
+      // r11; the states are vocabulary-sized, so the shares are small)
+      val s0 = Materialize.share(vocab
         .select(col("word"), col("cnt"),
           posexplode(regexp_extract_all(col("word"), lit("."), lit(0))).as(Seq("p", "tok")))
         .select(col("word"), col("cnt"), (col("p") + 1).cast(LongType).as("pos"), col("tok")))
       val (b1, s1a) = bpeRound(s0)
-      val s1 = pinned(s1a)
+      val s1 = Materialize.share(s1a)
       val (b2, s2a) = bpeRound(s1)
-      val s2 = pinned(s2a)
+      val s2 = Materialize.share(s2a)
       val (b3, s3) = bpeRound(s2)
       val m = Seq(b1 -> 1, b2 -> 2, b3 -> 3).map { case (b, i) =>
         b.select(lit("m").as("kind"), col("l").as("word"),
@@ -1458,9 +1458,8 @@ object TextOps {
       }.reduce(_.unionAll(_))
       val s = s3.select(lit("s").as("kind"), col("word"),
         col("cnt").cast(LongType).as("cnt"), col("pos"), col("tok"))
-      val artifact = m.unionAll(s)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // materialize the artifact, then release the intermediate pins —
+      val artifact = Materialize.share(m.unionAll(s))
+      // materialize the artifact, then release the round states —
       // the served tokenizer is the only frame later consumers read
       artifact.count()
       Seq(s0, s1, s2).foreach(_.unpersist(blocking = false))
@@ -1599,8 +1598,7 @@ object TextOps {
     */
   private[graft] def unigramArtifacts(t: Tables): DataFrame =
     graft.PersistCache.getOrElseUpdate(t.spark, t.dir + "#unigram") {
-      import graft.plans.Pin.pinned
-      val words = pinned(t.documents
+      val words = Materialize.share(t.documents
         .select(explode(split(trim(col("text")), "\\s+")).as("w0"))
         .select(lower(col("w0")).as("word"))
         .filter(col("word") =!= "")
@@ -1617,7 +1615,7 @@ object TextOps {
       val singles = pf.filter(length(col("piece")) === 1)
       val multis = pf.filter(length(col("piece")) > 1)
         .orderBy(col("f").desc, col("piece")).limit(64)
-      val seed = pinned(singles.unionAll(multis))
+      val seed = Materialize.share(singles.unionAll(multis))
       def collectModel(df: DataFrame, cntCol: String)
         : (Seq[String], Seq[Int], Int) = {
         val rows = df
@@ -1632,7 +1630,7 @@ object TextOps {
           typedLit(m._1), typedLit(m._2), lit(m._3))
       val seg1 = words.select(col("cnt"),
         segCol(collectModel(seed, "f")).as("g"))
-      val usage = pinned(seg1
+      val usage = Materialize.share(seg1
         .select(col("cnt"), explode(split(col("g"), "\\|")).as("piece"))
         .filter(col("piece") =!= "")
         .groupBy(col("piece")).agg(sum(col("cnt")).cast(LongType).as("u")))
@@ -1643,8 +1641,7 @@ object TextOps {
       val w = seg2.select(lit("w").as("kind"), col("word"),
         col("cnt").cast(LongType).as("cnt"),
         (size(split(col("g"), "\\|")) - 1).cast(LongType).as("k"))
-      val artifact = p.unionAll(w)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val artifact = Materialize.share(p.unionAll(w))
       artifact.count()
       Seq(words, seed, usage).foreach(_.unpersist(blocking = false))
       artifact

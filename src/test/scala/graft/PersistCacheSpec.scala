@@ -2,13 +2,22 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import graft.plans.Materialize
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.sum
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
+
 import scala.concurrent.{Await, Future}
 import scala.concurrent.duration._
 import scala.concurrent.ExecutionContext.Implicits.global
 
 /** The shared memo registry's contract: one build per (session, key)
   * even under concurrent misses, hits return the same frame, invalidate
-  * drops and allows a rebuild.
+  * drops and allows a rebuild, every build is held with
+  * Materialize.share. Also the fill contract of Materialize's three
+  * intents.
   */
 class PersistCacheSpec extends SparkSpec {
 
@@ -62,7 +71,7 @@ class PersistCacheSpec extends SparkSpec {
       Thread.sleep(2); get(s2)
       Thread.sleep(2); get(s3) // third slot under a bound of 2 → s1 evicts
       // s1's frame was unpersisted by the eviction…
-      assert(f1.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
+      assert(f1.storageLevel === StorageLevel.NONE)
       // …and a re-get rebuilds it (slot gone)
       val before = builds.get()
       get(s1)
@@ -70,27 +79,70 @@ class PersistCacheSpec extends SparkSpec {
     } finally Seq(s1, s2, s3).foreach(PersistCache.invalidate)
   }
 
-  test("Pin.pinned materializes ONCE, serves consumers from cache, keeps lineage") {
-    val acc = spark.sparkContext.longAccumulator("pin_builds")
+  /** A 100-row frame whose source bumps `acc` once per row evaluated. */
+  private def countedSource(acc: org.apache.spark.util.LongAccumulator): DataFrame = {
     val rdd = spark.sparkContext.parallelize(1 to 100, 4)
-      .map { i => acc.add(1); org.apache.spark.sql.Row(i) }
-    val df = spark.createDataFrame(rdd,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("v",
-          org.apache.spark.sql.types.IntegerType))))
-    val pinned = graft.plans.Pin.pinned(df)
-    // r16: the pin is LAZY — registering the cache runs nothing…
-    assert(acc.value === 0L, "pinned() must not run a dedicated job")
+      .map { i => acc.add(1); Row(i) }
+    spark.createDataFrame(rdd, StructType(Seq(StructField("v", IntegerType))))
+  }
+
+  private def sumV(df: DataFrame): Long = df.agg(sum("v")).head().getLong(0)
+
+  // keeps the name of the former Pin.pinned test: Materialize.share now
+  // carries that contract unchanged
+  test("Pin.pinned materializes ONCE, serves consumers from cache, keeps lineage") {
+    val acc = spark.sparkContext.longAccumulator("share_builds")
+    val shared = Materialize.share(countedSource(acc))
+    // the share is LAZY — registering the cache runs nothing…
+    assert(acc.value === 0L, "share() must not run a dedicated job")
     // …the FIRST consumer materializes the source exactly once…
-    assert(pinned.count() === 100L)
+    assert(shared.count() === 100L)
     assert(acc.value === 100L)
     // …and every later consumer reads the cached blocks, not the source
-    assert(pinned.agg(org.apache.spark.sql.functions.sum("v"))
-      .head().getLong(0) === 5050L)
-    assert(acc.value === 100L, "a consumer re-ran the pinned source")
-    // lineage survives (persist, not localCheckpoint): the analyzed plan
-    // still reaches the source relation, so a lost block is recomputable
-    assert(pinned.storageLevel.useMemory && pinned.storageLevel.useDisk)
-    pinned.unpersist(blocking = true)
+    assert(sumV(shared) === 5050L)
+    assert(acc.value === 100L, "a consumer re-ran the shared source")
+    // lineage survives (persist, not localCheckpoint): the plan still
+    // reaches the source relation, so a lost block is recomputable
+    assert(shared.storageLevel === StorageLevel.MEMORY_AND_DISK)
+    shared.unpersist(blocking = true)
+  }
+
+  test("Materialize.truncate cuts the plan at the call and fills on the first action") {
+    val acc = spark.sparkContext.longAccumulator("truncate_builds")
+    val cut = Materialize.truncate(countedSource(acc))
+    assert(acc.value === 0L, "truncate() must not run a job at the call")
+    val rdd = cut.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
+    // plan dumps name the calling site, not Materialize.scala
+    assert(rdd.toString.contains("at localCheckpoint at PersistCacheSpec.scala:"), rdd.toString)
+    assert(cut.count() === 100L)
+    assert(acc.value === 100L)
+    assert(sumV(cut) === 5050L)
+    assert(acc.value === 100L, "a second consumer re-ran the truncated source")
+  }
+
+  test("Materialize.snapshot runs the source once at the call, before any consumer") {
+    val acc = spark.sparkContext.longAccumulator("snapshot_builds")
+    val snap = Materialize.snapshot(countedSource(acc))
+    assert(acc.value === 100L, "snapshot() must fill at the call")
+    assert(snap.queryExecution.logical.isInstanceOf[LogicalRDD])
+    assert(snap.count() === 100L)
+    assert(sumV(snap) === 5050L)
+    assert(acc.value === 100L, "a consumer re-ran the snapshotted source")
+  }
+
+  test("memo builds are shared; persisted or checkpointed builds are kept as they are") {
+    val key = "spec#share-" + System.nanoTime()
+    // distinct row counts: no other spec's frame may share a cache entry
+    val plain = PersistCache.getOrElseUpdate(spark, key + "-plain")(spark.range(7001).toDF())
+    assert(plain.storageLevel === StorageLevel.MEMORY_AND_DISK)
+    val persisted = spark.range(7002).toDF().persist(StorageLevel.MEMORY_ONLY)
+    val kept = PersistCache.getOrElseUpdate(spark, key + "-persisted")(persisted)
+    assert(kept eq persisted)
+    assert(kept.storageLevel === StorageLevel.MEMORY_ONLY)
+    val cut = Materialize.truncate(spark.range(7003).toDF())
+    val keptCut = PersistCache.getOrElseUpdate(spark, key + "-truncated")(cut)
+    assert(keptCut eq cut)
+    assert(keptCut.storageLevel === StorageLevel.NONE, "a checkpoint was persisted again")
+    Seq(plain, persisted).foreach(_.unpersist(blocking = true))
   }
 }

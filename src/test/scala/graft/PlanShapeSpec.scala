@@ -770,4 +770,27 @@ class PlanShapeSpec extends SparkSpec {
     assert(sorts.nonEmpty, "sort under LIMIT must keep its ordering role")
     assert(!topk.queryExecution.logical.isInstanceOf[Sort])
   }
+
+  test("idfBanded's cached plan reuses the tokenized-count exchange") {
+    // The `cnt > 0` filter in Dedup.idfBanded keeps both tokc subtrees
+    // canonically equal; without it the tokenize+explode pipeline runs
+    // twice per build. Walks the cached plan (AQE-final once filled,
+    // the static plan with AQE off) for the ReusedExchange.
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case m: InMemoryTableScanExec => nodes(m.relation.cacheBuilder.cachedPlan)
+      case _ => p.children.flatMap(nodes)
+    })
+    val read = graft.dedup.Dedup.idfBanded(sf0001).groupBy().count()
+    read.collect()
+    val reused = nodes(read.queryExecution.executedPlan)
+      .collect { case r: ReusedExchangeExec => r }
+    assert(reused.nonEmpty,
+      "idfBanded lost its ReusedExchange:\n" + read.queryExecution.executedPlan)
+  }
 }
